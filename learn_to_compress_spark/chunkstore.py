@@ -25,14 +25,19 @@ sandbox (no Iceberg jars): a partition's chunks are visible only if a lineage
 row ``(part_id, run_id, metrics...)`` exists. Data files are written before
 lineage, so a killed job leaves orphan chunk rows that readers never see, and
 a resumed job re-encodes only parts without lineage — idempotent, atomic per
-partition. On a real deployment this maps 1:1 to Iceberg table commits + a
-metrics table; only this module would change.
+partition. Each run commits ONE lineage file (Delta-log style): the encode
+writes its per-part rows under a hidden ``.part-*.tmp`` name, which Spark's
+file listing skips, and publishes them with ``os.replace``, so a run's parts
+become visible together and a crash mid-commit leaves nothing readers see.
+On a real deployment this maps 1:1 to Iceberg table commits + a metrics
+table; only this module would change.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -104,6 +109,46 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("wall_ms", T.DoubleType(), False),
     ]
 )
+
+
+def commit_run(store: str, run_id: str, parts, wall_ms: float) -> None:
+    """Commit a run: write its per-part lineage rows as ONE Parquet file.
+
+    ``parts`` are the run's per-part metric rows (``part_id``,
+    ``n_chunks``, ``n_rows``, ``raw_bytes``, ``enc_bytes``). The file is
+    written under a hidden ``.part-*.tmp`` name, which Spark's file listing
+    skips, then published with ``os.replace`` — the atomic commit point of
+    the run. A crash before the rename leaves only the hidden temp file, so
+    readers see the run entirely or not at all. The name carries the run id
+    plus a random suffix: a repeated run id adds a file instead of
+    replacing an earlier commit. A run that wrote no chunk commits nothing.
+    """
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if not parts:
+        return
+    arrow_of = {
+        "integer": pa.int32(), "long": pa.int64(), "string": pa.string(),
+        "double": pa.float64(),
+    }
+    schema = pa.schema(
+        [(f.name, arrow_of[f.dataType.typeName()]) for f in LINEAGE_SCHEMA.fields]
+    )
+    records = [
+        {**r.asDict(), "run_id": run_id, "wall_ms": float(wall_ms)} for r in parts
+    ]
+    d = lineage_current_dir(store)
+    os.makedirs(d, exist_ok=True)
+    name = f"part-{run_id}-{uuid.uuid4().hex[:8]}.parquet"
+    tmp = os.path.join(d, f".{name}.tmp")
+    # no Arrow schema blob or column statistics: readers apply
+    # LINEAGE_SCHEMA, and a one-row-group file has nothing to skip
+    pq.write_table(
+        pa.Table.from_pylist(records, schema=schema), tmp,
+        store_schema=False, write_statistics=False,
+    )
+    os.replace(tmp, os.path.join(d, name))
 
 
 def chunks_path(store: str) -> str:

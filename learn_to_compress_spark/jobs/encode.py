@@ -3,13 +3,26 @@
 
 Plan shape (one shuffle, then embarrassingly-parallel map):
 
+    [prelude: ONE bounded driver sample of the key + int columns feeds the
+     linked-column probe and the race seed]
     input DataFrame
       → part_id = pmod(xxhash64(conv_id, turn_idx // salt_block), P)   [salted]
       → [resume: anti-filter against committed lineage part_ids]
       → repartition(P, part_id)                                        [shuffle]
       → sortWithinPartitions(part_id, *key_cols)                       [stable order]
       → mapInArrow(encode kernel)  — one OUTPUT ROW per column chunk
-      → append Parquet chunk files, then append lineage rows           [commit]
+      → append Parquet chunk files                                     [write job]
+    → collect this run's per-part metrics (P rows), write them as ONE
+      lineage file under a hidden temp name, os.replace it into place  [commit]
+
+A fresh salted encode runs five Spark jobs: the sample, the write (scan
+stage + encode stage) and the per-part metrics (two stages). The commit is
+a single driver-side rename, the same POSIX atomicity ``_schema.json`` and
+the compaction pointer rely on, and the returned totals are the prior
+lineage totals plus this run's rows — the lineage is re-read only when the
+prior totals are unknown (``resume=False`` on an existing store). Resume
+reads the lineage once for both the done-part set and those totals; a
+store without ``_schema.json`` has no lineage and reads nothing.
 
 The salt splits a long conversation into ``salt_block``-turn ranges so a
 hot conversation cannot hot-spot one partition (north_star skew clause);
@@ -38,7 +51,7 @@ from ..chunkstore import (
     chunk_schema,
     chunks_path,
     col_field,
-    lineage_current_dir,
+    commit_run,
     read_lineage,
     schema_path,
 )
@@ -221,8 +234,59 @@ def tune_chunk_rows(
     return best, sizes
 
 
+_INTISH = ("int32", "int64", "timestamp_us", "timestamp_ntz_us")
+
+#: rows of the shared driver sample the linked-column probe reads
+PROBE_SAMPLE_ROWS = 1 << 15
+
+
+def _int_colspecs(colspecs) -> list[tuple[str, str]]:
+    return [(n, lg) for n, lg in colspecs if lg in _INTISH]
+
+
+def seed_sample_rows(chunk_rows: int) -> int:
+    """Rows of the shared driver sample the race seed reads: two chunks,
+    capped at 128Ki."""
+    return min(2 * chunk_rows, 1 << 17)
+
+
+def _driver_sample(
+    df: DataFrame, key_cols: tuple[str, ...], colspecs, n_rows: int
+) -> pd.DataFrame | None:
+    """The encode prelude's ONE bounded driver collect: the key and
+    int/timestamp columns of the first ``n_rows`` rows, in scan order.
+
+    The linked-column probe and the race seed each read a prefix of it
+    (``_sample_prefix``), which is the row set a separate ``limit(k)``
+    collect of the same columns would return. Only int/timestamp columns
+    are taken (string races are sampling-based already), so the collect
+    never ships a text column. None when the table has no int column."""
+    int_cols = _int_colspecs(colspecs)
+    if not int_cols:
+        return None
+    take = list(dict.fromkeys([*(k for k in key_cols if k), *(n for n, _ in int_cols)]))
+    return df.select(*take).limit(int(n_rows)).toPandas()
+
+
+def _sample_prefix(sample: pd.DataFrame, colspecs, n_rows: int) -> pd.DataFrame:
+    """First ``n_rows`` rows of the shared sample, typed as a separate
+    ``limit(n_rows).toPandas()`` would type them: PySpark turns a nullable
+    int column into float64 only when the collected rows hold a null, so a
+    null-free prefix of such a column goes back to its int dtype."""
+    pdf = sample.iloc[: int(n_rows)]
+    for name, logical in colspecs:
+        if (
+            logical in ("int32", "int64")
+            and name in pdf.columns
+            and pdf[name].dtype.kind == "f"
+            and not pdf[name].isna().any()
+        ):
+            pdf = pdf.astype({name: logical})
+    return pdf
+
+
 def _sample_race_seed(
-    df: DataFrame,
+    sample: pd.DataFrame | None,
     key_cols: tuple[str, ...],
     colspecs,
     chunk_rows: int,
@@ -236,22 +300,17 @@ def _sample_race_seed(
     effective even when a task sees only one or two chunks of a column
     (small jobs / many-partition layouts) — at scale the per-worker
     ``RACE_RECHECK`` re-race still corrects a sample that under-represents
-    a late distribution shift. Only int/timestamp columns sample (string
-    races are sampling-based already), so the bounded ``limit().toPandas``
-    collect never ships a text column."""
+    a late distribution shift. Reads the first ``sample_rows`` (default
+    ``seed_sample_rows(chunk_rows)``) rows of the shared driver sample."""
     import pyarrow as pa
 
     from ..select import RACE_PATIENCE
 
-    int_cols = [
-        (n, lg) for n, lg in colspecs
-        if lg in ("int32", "int64", "timestamp_us", "timestamp_ntz_us")
-    ]
-    if not int_cols:
+    int_cols = _int_colspecs(colspecs)
+    if sample is None or not int_cols:
         return {}
-    take = list(dict.fromkeys([*(k for k in key_cols if k), *(n for n, _ in int_cols)]))
-    n_rows = sample_rows if sample_rows is not None else min(2 * chunk_rows, 1 << 17)
-    pdf = df.select(*take).limit(int(n_rows)).toPandas()
+    n_rows = sample_rows if sample_rows is not None else seed_sample_rows(chunk_rows)
+    pdf = _sample_prefix(sample, colspecs, n_rows)
     if not len(pdf):
         return {}
     sortable = [k for k in key_cols if k in pdf.columns]
@@ -276,10 +335,10 @@ def _sample_race_seed(
 
 
 def _propose_linked_cols(
-    df: DataFrame,
+    sample: pd.DataFrame | None,
     key_cols: tuple[str, ...],
     colspecs,
-    sample_rows: int = 1 << 15,
+    sample_rows: int = PROBE_SAMPLE_ROWS,
     margin: float = 0.7,
 ) -> dict[str, str] | None:
     """Sampled group-correlation probe — auto-detect companion columns for
@@ -296,19 +355,16 @@ def _propose_linked_cols(
     (``margin``), companions follow the schema constraints (a companion
     cannot itself be a target), and the per-chunk linked RACE still verifies
     exactly — a false proposal costs one extra race leg per chunk, never
-    bytes. The sample sorts by ``key_cols`` so the correlation is measured
-    in the kernel's within-chunk order."""
+    bytes. The probe reads the first ``sample_rows`` rows of the shared
+    driver sample and sorts them by ``key_cols``, so the correlation is
+    measured in the kernel's within-chunk order."""
     from ..codecs.base import preds_castable
     from ..select import int_codec_sizes
 
-    int_cols = [
-        (n, lg) for n, lg in colspecs
-        if lg in ("int32", "int64", "timestamp_us", "timestamp_ntz_us")
-    ]
-    if len(int_cols) < 2:
+    int_cols = _int_colspecs(colspecs)
+    if sample is None or len(int_cols) < 2:
         return None
-    take = list(dict.fromkeys([*(k for k in key_cols if k), *(n for n, _ in int_cols)]))
-    pdf = df.select(*take).limit(int(sample_rows)).toPandas()
+    pdf = _sample_prefix(sample, colspecs, sample_rows)
     if len(pdf) < 1024:
         return None  # too small to trust a correlation
     sortable = [k for k in key_cols if k in pdf.columns]
@@ -651,6 +707,16 @@ def _load_schema_doc(store: str) -> dict | None:
         return json.load(fh)
 
 
+def _totals(rows) -> tuple:
+    """``(rows, raw_bytes, enc_bytes)`` summed over lineage rows — None
+    over no rows, as Spark's ``sum`` answers."""
+    if not rows:
+        return None, None, None
+    return tuple(
+        sum(getattr(r, k) for r in rows) for k in ("n_rows", "raw_bytes", "enc_bytes")
+    )
+
+
 def encode_table(
     df: DataFrame,
     store: str,
@@ -667,6 +733,11 @@ def encode_table(
     linked_cols: dict[str, str] | None = None,
 ) -> dict:
     """Encode ``df`` into the chunk store; returns job metrics.
+
+    Timings in the result: ``wall_ms`` is the write job alone;
+    ``prelude_ms`` is everything before it (the driver sample, the linked
+    probe, the regressor install, the race seed and the resume lookup);
+    ``commit_ms`` is the lineage collect, the publish and the totals.
 
     ``key_cols``: (partition key, order keys...) — ``(conv_id, turn_idx)``
     for transcripts. All other columns ride along and are chunked in the
@@ -691,6 +762,7 @@ def encode_table(
     validated). Default stays the salted shuffle — correct for ANY row
     order, per the north-star skew clause.
     """
+    t_start = time.monotonic()
     spark = df.sparkSession
     run_id = run_id or uuid.uuid4().hex[:12]
     colspecs = colspecs_of(df)
@@ -698,18 +770,16 @@ def encode_table(
     stored_doc = _load_schema_doc(store)
     if linked_cols is None and stored_doc is not None:
         linked_cols = stored_doc.get("linked_cols")  # resume reuses the map
-    if linked_cols is None and stored_doc is None and selection == "exact":
-        # colcor auto-detect: propose the map from a bounded driver sample
-        # (see _propose_linked_cols). Only on FIRST encode of a store —
-        # appends/resumes reuse the persisted map, keeping the store's
-        # codec identity stable.
-        linked_cols = _propose_linked_cols(df, key_cols, colspecs)
+    # colcor auto-detect: propose the map from the driver sample (see
+    # _propose_linked_cols). Only on FIRST encode of a store — appends/
+    # resumes reuse the persisted map, keeping the store's codec identity
+    # stable.
+    probe = linked_cols is None and stored_doc is None and selection == "exact"
     if linked_cols:
-        intish = {"int32", "int64", "timestamp_us", "timestamp_ntz_us"}
         for tgt, comp in linked_cols.items():
             if tgt == comp or tgt not in logical_of or comp not in logical_of:
                 raise ValueError(f"linked_cols: bad pair {tgt!r} -> {comp!r}")
-            if logical_of[tgt] not in intish or logical_of[comp] not in intish:
+            if logical_of[tgt] not in _INTISH or logical_of[comp] not in _INTISH:
                 raise ValueError(
                     f"linked_cols: {tgt!r}/{comp!r} must be int/timestamp columns"
                 )
@@ -722,9 +792,8 @@ def encode_table(
         # block-size auto-tuning (operator: pick_block_size): a resumed/
         # appended store reuses its persisted choice — chunk sizing is part
         # of the store's identity for reproducible re-encodes
-        stored = _load_schema_doc(store)
-        if stored is not None and "chunk_rows" in stored:
-            chunk_rows = int(stored["chunk_rows"])
+        if stored_doc is not None and "chunk_rows" in stored_doc:
+            chunk_rows = int(stored_doc["chunk_rows"])
         else:
             chunk_rows, tune_sizes = tune_chunk_rows(df, key_cols)
     chunk_rows = int(chunk_rows)
@@ -750,6 +819,19 @@ def encode_table(
         # every task ~4 parts and bounds the straggler ratio, and finer parts
         # also mean finer resume granularity
         default_parts = 4 * int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    # ONE bounded driver sample feeds both the linked probe and the race
+    # seed (only the exact race uses either). A fresh store collects it now,
+    # sized for both readers; an existing store only needs the seed's
+    # prefix, collected after the resume check so a no-op resume skips it.
+    sample: pd.DataFrame | None = None
+    if selection == "exact" and stored_doc is None:
+        n_sample = seed_sample_rows(chunk_rows)
+        if probe:
+            n_sample = max(n_sample, PROBE_SAMPLE_ROWS)
+        sample = _driver_sample(df, key_cols, colspecs, n_sample)
+    if probe:
+        linked_cols = _propose_linked_cols(sample, key_cols, colspecs)
     num_parts, salt_block = _persist_or_validate_schema(
         store, colspecs, key_cols, num_parts, salt_block, default_parts,
         chunk_rows=chunk_rows, linked_cols=linked_cols,
@@ -767,57 +849,60 @@ def encode_table(
         part_col = F.pmod(F.xxhash64(*salt_parts), F.lit(num_parts)).cast("int")
         work = df.withColumn("_part_id", part_col)
 
-    if resume:
-        done = [r.part_id for r in read_lineage(spark, store).select("part_id").distinct().collect()]
+    # lineage rows committed before this run, or None when unknown (an
+    # append with resume=False to an existing store re-reads after commit).
+    # A store with no _schema.json has no lineage yet.
+    prior: list | None = [] if stored_doc is None else None
+    if resume and stored_doc is not None:
+        # one metadata collect answers both the done-part set and the
+        # prior totals
+        prior = (
+            read_lineage(spark, store)
+            .select("part_id", "n_rows", "raw_bytes", "enc_bytes")
+            .collect()
+        )
+        done = sorted({r.part_id for r in prior})
         if done and set(done) >= set(range(num_parts)):
             # resume no-op fast path: every commit unit is already visible,
             # so the encode job would ship an empty plan — answer from the
-            # lineage metadata instead (repeated reads through a cached
-            # store pay one tiny metadata scan, not a full Spark job)
+            # lineage metadata instead
             if restore_conf:
                 for key, val in restore_conf.items():
                     spark.conf.set(key, val)
-            stats = (
-                read_lineage(spark, store)
-                .agg(
-                    F.sum("n_rows").alias("rows"),
-                    F.sum("raw_bytes").alias("raw"),
-                    F.sum("enc_bytes").alias("enc"),
-                )
-                .collect()[0]
-            )
+            rows, raw, enc = _totals(prior)
             return {
                 "run_id": None,
                 "wall_ms": 0.0,
-                "rows": stats.rows,
-                "raw_bytes": stats.raw,
-                "enc_bytes": stats.enc,
-                "ratio": (stats.enc / stats.raw) if stats.raw else None,
+                "prelude_ms": (time.monotonic() - t_start) * 1000,
+                "commit_ms": 0.0,
+                "rows": rows,
+                "raw_bytes": raw,
+                "enc_bytes": enc,
+                "ratio": (enc / raw) if raw else None,
                 "chunk_rows": chunk_rows,
                 "resumed_noop": True,
             }
         if done:
             work = work.filter(~F.col("_part_id").isin(done))
 
-    # pre-bench costly race candidates from a bounded driver sample (only
+    # pre-bench costly race candidates from the driver sample (only
     # meaningful for the exact race; forced/learned selections skip races)
     var_model = None
+    race_seed = None
     if selection == "exact":
         # driver-side one-time fit of the segmentation-gain regressor
         # (CART race pruning, regress_tree.h); ships as plain arrays in the
-        # kernel closure. Fit BEFORE the sample seed so the driver's own
-        # seeding race prunes with it too.
-        from ..learned import install_var_regressor, var_regressor_params
+        # kernel closure. Fitting also installs it on the driver, BEFORE the
+        # sample seed, so the driver's own seeding race prunes with it too.
+        from ..learned import var_regressor_params
 
         var_model = var_regressor_params()
-        install_var_regressor(var_model)
-    race_seed = (
-        _sample_race_seed(df, key_cols, colspecs, chunk_rows)
-        if selection == "exact"
-        else None
-    )
+        if stored_doc is not None:
+            sample = _driver_sample(df, key_cols, colspecs, seed_sample_rows(chunk_rows))
+        race_seed = _sample_race_seed(sample, key_cols, colspecs, chunk_rows)
 
     t0 = time.monotonic()
+    prelude_ms = (t0 - t_start) * 1000
     if presorted:
         # narrow plan: the filter preserves the scan partitioning, and each
         # task sees exactly one _part_id, so chunk seq counters stay unique
@@ -851,58 +936,66 @@ def encode_table(
         if restore_conf:
             for key, val in restore_conf.items():
                 spark.conf.set(key, val)
-    wall_ms = (time.monotonic() - t0) * 1000
+    t1 = time.monotonic()
+    wall_ms = (t1 - t0) * 1000
 
     # lineage commit: aggregate this run's chunk rows into per-part metrics —
     # a metadata-only scan (n_rows/raw/enc are top-level fields; nested
-    # schema pruning keeps payload bytes unread)
-    mine = spark.read.schema(chunk_schema(colspecs)).parquet(run_dir)
-    lineage = mine.groupBy("part_id").agg(
-        F.lit(run_id).alias("run_id"),
-        F.count("*").alias("n_chunks"),
-        F.sum("n_rows").cast("long").alias("n_rows"),
-        F.sum("raw_bytes").alias("raw_bytes"),
-        F.sum("enc_bytes").alias("enc_bytes"),
-        F.lit(float(wall_ms)).alias("wall_ms"),
+    # schema pruning keeps payload bytes unread) whose P rows come back to
+    # the driver, bounded at any table scale
+    parts = (
+        spark.read.schema(chunk_schema(colspecs))
+        .parquet(run_dir)
+        .groupBy("part_id")
+        .agg(
+            F.count("*").alias("n_chunks"),
+            F.sum("n_rows").cast("long").alias("n_rows"),
+            F.sum("raw_bytes").alias("raw_bytes"),
+            F.sum("enc_bytes").alias("enc_bytes"),
+        )
+        .collect()
     )
     if not commit:
         # staged run (compaction rewrite): chunk files exist but are
         # INVISIBLE — the caller swaps them in atomically via the lineage
         # pointer. A crash leaves an orphan run dir for vacuum_store.
-        st = lineage.agg(
-            F.sum("n_rows").alias("rows"),
-            F.sum("raw_bytes").alias("raw"),
-            F.sum("enc_bytes").alias("enc"),
-        ).collect()[0]
+        rows, raw, enc = _totals(parts)
         return {
             "run_id": run_id,
             "wall_ms": wall_ms,
-            "rows": st.rows or 0,
-            "raw_bytes": st.raw,
-            "enc_bytes": st.enc,
-            "ratio": (st.enc / st.raw) if st.raw else None,
+            "prelude_ms": prelude_ms,
+            "commit_ms": (time.monotonic() - t1) * 1000,
+            "rows": rows or 0,
+            "raw_bytes": raw,
+            "enc_bytes": enc,
+            "ratio": (enc / raw) if raw else None,
             "committed": False,
             "chunk_rows": chunk_rows,
             **({"tune_sizes": tune_sizes} if tune_sizes else {}),
         }
-    lineage.write.mode("append").parquet(lineage_current_dir(store))
-
-    stats = (
-        read_lineage(spark, store)
-        .agg(
-            F.sum("n_rows").alias("rows"),
-            F.sum("raw_bytes").alias("raw"),
-            F.sum("enc_bytes").alias("enc"),
+    commit_run(store, run_id, parts, wall_ms)
+    if prior is None:
+        st = (
+            read_lineage(spark, store)
+            .agg(
+                F.sum("n_rows").alias("rows"),
+                F.sum("raw_bytes").alias("raw"),
+                F.sum("enc_bytes").alias("enc"),
+            )
+            .collect()[0]
         )
-        .collect()[0]
-    )
+        rows, raw, enc = st.rows, st.raw, st.enc
+    else:
+        rows, raw, enc = _totals(prior + parts)
     return {
         "run_id": run_id,
         "wall_ms": wall_ms,
-        "rows": stats.rows,
-        "raw_bytes": stats.raw,
-        "enc_bytes": stats.enc,
-        "ratio": (stats.enc / stats.raw) if stats.raw else None,
+        "prelude_ms": prelude_ms,
+        "commit_ms": (time.monotonic() - t1) * 1000,
+        "rows": rows,
+        "raw_bytes": raw,
+        "enc_bytes": enc,
+        "ratio": (enc / raw) if raw else None,
         "chunk_rows": chunk_rows,
         **({"tune_sizes": tune_sizes} if tune_sizes else {}),
     }

@@ -374,15 +374,20 @@ def _regressor_training(block: int = 4096):
 
 
 _VAR_REG: CartRegressor | None = None
+#: the trained tree's params — a pure function of the fixed training corpus,
+#: so one fit per process serves every later install
+_VAR_PARAMS: dict | None = None
 
 
 def var_regressor_params() -> dict:
-    """Driver-side lazy train → plain-array params for the kernel closure."""
-    global _VAR_REG
-    if _VAR_REG is None:
+    """Driver-side lazy train → plain-array params for the kernel closure
+    (also installs the tree in this process when none is installed)."""
+    global _VAR_PARAMS
+    if _VAR_PARAMS is None:
         X, y = _regressor_training()
-        _VAR_REG = CartRegressor().fit(X, y)
-    return _VAR_REG.to_params()
+        _VAR_PARAMS = CartRegressor().fit(X, y).to_params()
+    install_var_regressor(_VAR_PARAMS)
+    return _VAR_PARAMS
 
 
 def install_var_regressor(params: dict | None) -> None:

@@ -48,6 +48,31 @@ def tune_malloc() -> None:
 tune_malloc()
 
 
+def default_driver_memory(
+    environ=os.environ, meminfo: str = "/proc/meminfo"
+) -> str:
+    """``spark.driver.memory`` for :func:`get_spark`.
+
+    ``SPARK_DRIVER_MEM`` wins when set. Otherwise the heap is half of the
+    host's RAM, capped at 32g: local mode runs every task inside the driver
+    JVM, but a heap above physical memory only trades an OutOfMemoryError
+    for swapping or the host's OOM killer. Hosts without a readable
+    ``MemTotal`` keep the 32g cap."""
+    explicit = environ.get("SPARK_DRIVER_MEM")
+    if explicit:
+        return explicit
+    cap_mb = 32 << 10
+    try:
+        with open(meminfo) as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    total_mb = int(line.split()[1]) // 1024  # reported in kB
+                    return f"{min(cap_mb, total_mb // 2)}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return f"{cap_mb}m"
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "learn-to-compress-spark",
@@ -75,8 +100,8 @@ def get_spark(
         # scan task per core; on a cluster it is simply Spark's default ÷2
         .config("spark.sql.files.maxPartitionBytes", "67108864")
         # single-JVM local mode runs every task in the driver: size the heap
-        # for 32 concurrent task buffers, not for a thin coordinator
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        # for concurrent task buffers, within the host's RAM
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         # worker-side malloc tuning (see tune_malloc): without it every
         # column-chunk buffer is a fresh mmap whose page faults dominate

@@ -8,3 +8,16 @@ def spark():
     s = get_spark("local[4]", chunk_rows=2048, shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture(autouse=True)
+def _restore_var_regressor():
+    """Keep the process-global race-pruning regressor from leaking between
+    tests: fitting it (``learned.var_regressor_params``) and every exact
+    ``encode_table`` install it in-process, which would silently switch
+    pruning on for later library calls and make results order-dependent."""
+    from learn_to_compress_spark import learned
+
+    saved = learned._VAR_REG
+    yield
+    learned._VAR_REG = saved
