@@ -111,23 +111,23 @@ LINEAGE_SCHEMA = T.StructType(
 )
 
 
-def commit_run(store: str, run_id: str, parts, wall_ms: float) -> None:
-    """Commit a run: write its per-part lineage rows as ONE Parquet file.
+def lineage_records(run_id: str, parts, wall_ms: float) -> list[dict]:
+    """A run's lineage rows: its per-part metric rows (``part_id``,
+    ``n_chunks``, ``n_rows``, ``raw_bytes``, ``enc_bytes``) tagged with the
+    run id and the run's write wall time."""
+    return [{**r.asDict(), "run_id": run_id, "wall_ms": float(wall_ms)} for r in parts]
 
-    ``parts`` are the run's per-part metric rows (``part_id``,
-    ``n_chunks``, ``n_rows``, ``raw_bytes``, ``enc_bytes``). The file is
-    written under a hidden ``.part-*.tmp`` name, which Spark's file listing
-    skips, then published with ``os.replace`` — the atomic commit point of
-    the run. A crash before the rename leaves only the hidden temp file, so
-    readers see the run entirely or not at all. The name carries the run id
-    plus a random suffix: a repeated run id adds a file instead of
-    replacing an earlier commit. A run that wrote no chunk commits nothing.
-    """
+
+def publish_lineage_file(lineage_dir: str, name: str, records: list[dict]) -> None:
+    """Write lineage ``records`` as ONE Parquet file in ``lineage_dir``.
+
+    The file is written under a hidden ``.<name>.tmp`` name, which Spark's
+    file listing skips, then published with ``os.replace`` — the atomic
+    commit point. A crash before the rename leaves only the hidden temp
+    file, so readers see all of ``records`` or none of them."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    if not parts:
-        return
     arrow_of = {
         "integer": pa.int32(), "long": pa.int64(), "string": pa.string(),
         "double": pa.float64(),
@@ -135,20 +135,30 @@ def commit_run(store: str, run_id: str, parts, wall_ms: float) -> None:
     schema = pa.schema(
         [(f.name, arrow_of[f.dataType.typeName()]) for f in LINEAGE_SCHEMA.fields]
     )
-    records = [
-        {**r.asDict(), "run_id": run_id, "wall_ms": float(wall_ms)} for r in parts
-    ]
-    d = lineage_current_dir(store)
-    os.makedirs(d, exist_ok=True)
-    name = f"part-{run_id}-{uuid.uuid4().hex[:8]}.parquet"
-    tmp = os.path.join(d, f".{name}.tmp")
+    os.makedirs(lineage_dir, exist_ok=True)
+    tmp = os.path.join(lineage_dir, f".{name}.tmp")
     # no Arrow schema blob or column statistics: readers apply
     # LINEAGE_SCHEMA, and a one-row-group file has nothing to skip
     pq.write_table(
         pa.Table.from_pylist(records, schema=schema), tmp,
         store_schema=False, write_statistics=False,
     )
-    os.replace(tmp, os.path.join(d, name))
+    os.replace(tmp, os.path.join(lineage_dir, name))
+
+
+def commit_run(store: str, run_id: str, parts, wall_ms: float) -> None:
+    """Commit a run: publish its lineage rows as ONE file in the current
+    lineage dir (``publish_lineage_file``), so the run's parts become
+    visible together. The name carries the run id plus a random suffix: a
+    repeated run id adds a file instead of replacing an earlier commit. A
+    run that wrote no chunk commits nothing."""
+    if not parts:
+        return
+    publish_lineage_file(
+        lineage_current_dir(store),
+        f"part-{run_id}-{uuid.uuid4().hex[:8]}.parquet",
+        lineage_records(run_id, parts, wall_ms),
+    )
 
 
 def chunks_path(store: str) -> str:

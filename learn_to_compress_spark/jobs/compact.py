@@ -14,7 +14,9 @@ full-size chunks and swaps them in ATOMICALLY:
    re-encode into a staged run — ``encode_table(commit=False)`` writes chunk
    files that no reader can see;
 3. build the next lineage version = current lineage minus the victims' rows
-   plus the staged run's rows, write it to a fresh ``lineage_v/<N>/`` dir;
+   plus the staged run's rows (the per-part rows ``encode_table`` returns),
+   publish it as one file in a fresh ``lineage_v/<N>/`` dir
+   (``chunkstore.publish_lineage_file``, the same writer as a run commit);
 4. ``os.replace`` the pointer file — the single atomic commit point
    (Iceberg's metadata-location CAS). A crash at ANY earlier step leaves the
    store byte-identical for readers; the staged run is an invisible orphan
@@ -42,12 +44,14 @@ from ..chunkstore import (
     chunks_path,
     lineage_current_dir,
     lineage_pointer_path,
+    lineage_records,
     load_store_schema,
+    publish_lineage_file,
     read_lineage,
 )
 from ..sources.session import DEFAULT_CHUNK_ROWS
 from .decode import decode_table
-from .encode import chunk_schema, encode_table
+from .encode import encode_table
 
 
 def fragmented_parts(
@@ -120,27 +124,15 @@ def compact_store(
     run_id = staged["run_id"]
 
     # next lineage version: everything minus victims, plus the staged run
-    colspecs = [tuple(cs) for cs in doc["colspecs"]]
-    run_dir = os.path.join(chunks_path(store), f"run_id={run_id}")
-    new_rows = (
-        spark.read.schema(chunk_schema(colspecs))
-        .parquet(run_dir)
-        .groupBy("part_id")
-        .agg(
-            F.lit(run_id).alias("run_id"),
-            F.count("*").alias("n_chunks"),
-            F.sum("n_rows").cast("long").alias("n_rows"),
-            F.sum("raw_bytes").alias("raw_bytes"),
-            F.sum("enc_bytes").alias("enc_bytes"),
-            F.lit(float(staged["wall_ms"])).alias("wall_ms"),
-        )
-    )
-    keep = read_lineage(spark, store).filter(~F.col("part_id").isin(victims))
+    keep = [
+        r.asDict()
+        for r in read_lineage(spark, store).filter(~F.col("part_id").isin(victims)).collect()
+    ]
     # next version = max(existing lineage_v entries) + 1, NOT pointer + 1:
     # a compaction that crashed after writing lineage_v/<N> but before the
     # pointer swap leaves an orphan <N>; deriving from the pointer would
-    # recompute the same N and errorifexists would abort every subsequent
-    # compaction until a manual vacuum (ADVICE r2)
+    # recompute the same N and the exclusive mkdir would abort every
+    # subsequent compaction until a manual vacuum
     vdir = os.path.join(store, "lineage_v")
     ver = 0
     if os.path.isdir(vdir):
@@ -148,7 +140,12 @@ def compact_store(
         if existing:
             ver = max(existing) + 1
     next_dir = os.path.join(store, "lineage_v", f"{ver:010d}")
-    keep.unionByName(new_rows).coalesce(1).write.mode("errorifexists").parquet(next_dir)
+    os.makedirs(next_dir)  # exclusive: never write into an existing version
+    publish_lineage_file(
+        next_dir,
+        "part-00000.parquet",
+        keep + lineage_records(run_id, staged["parts"], staged["wall_ms"]),
+    )
 
     # the atomic commit: os.replace of the pointer file
     tmp = lineage_pointer_path(store) + ".tmp"
@@ -165,8 +162,8 @@ def compact_store(
 
 def vacuum_store(spark: SparkSession, store: str) -> dict:
     """Delete unreferenced bytes: run dirs absent from the current lineage
-    (compacted-away or crashed-before-commit) and superseded lineage
-    versions. Runs pinned by a snapshot manifest
+    (compacted-away or crashed-before-commit), superseded lineage versions
+    and the hidden temp files of crashed lineage commits. Runs pinned by a snapshot manifest
     (``chunkstore.snapshot_store`` — the time-travel surface) stay live;
     releasing them is an explicit ``drop_snapshot`` (Iceberg
     ``expire_snapshots``) followed by another vacuum.
@@ -192,6 +189,13 @@ def vacuum_store(spark: SparkSession, store: str) -> dict:
             removed_runs.append(d.split("=", 1)[1])
     removed_lineage = []
     cur = lineage_current_dir(store)
+    # hidden temp files of lineage commits that crashed before os.replace
+    # (chunkstore.publish_lineage_file): invisible to readers, never
+    # published — like a crashed run's directory, garbage for vacuum
+    for f in os.listdir(cur) if os.path.isdir(cur) else []:
+        if f.startswith(".part-") and f.endswith(".tmp"):
+            os.remove(os.path.join(cur, f))
+            removed_lineage.append(f)
     vroot = os.path.join(store, "lineage_v")
     if os.path.isdir(vroot):
         for d in os.listdir(vroot):

@@ -19,10 +19,13 @@ A fresh salted encode runs five Spark jobs: the sample, the write (scan
 stage + encode stage) and the per-part metrics (two stages). The commit is
 a single driver-side rename, the same POSIX atomicity ``_schema.json`` and
 the compaction pointer rely on, and the returned totals are the prior
-lineage totals plus this run's rows — the lineage is re-read only when the
-prior totals are unknown (``resume=False`` on an existing store). Resume
-reads the lineage once for both the done-part set and those totals; a
-store without ``_schema.json`` has no lineage and reads nothing.
+lineage totals plus this run's rows, so the lineage is never re-read after
+the write. An existing store reads its lineage once, before the write, for
+both the done-part set (on resume) and those prior totals; a store without
+``_schema.json`` has no lineage and reads nothing. A fresh ``presorted``
+encode whose input splits get re-sized takes the probe's sample before the
+re-sizing and the race seed's after it, so both read the rows they would
+read alone.
 
 The salt splits a long conversation into ``salt_block``-turn ranges so a
 hot conversation cannot hot-spot one partition (north_star skew clause);
@@ -736,8 +739,10 @@ def encode_table(
 
     Timings in the result: ``wall_ms`` is the write job alone;
     ``prelude_ms`` is everything before it (the driver sample, the linked
-    probe, the regressor install, the race seed and the resume lookup);
-    ``commit_ms`` is the lineage collect, the publish and the totals.
+    probe, the regressor install, the race seed and the lineage lookup);
+    ``commit_ms`` is the lineage collect, the publish and the totals. With
+    ``commit=False`` the result also carries ``parts``, the run's per-part
+    lineage metric rows, for the caller to commit.
 
     ``key_cols``: (partition key, order keys...) — ``(conv_id, turn_idx)``
     for transcripts. All other columns ride along and are chunked in the
@@ -806,10 +811,26 @@ def encode_table(
     if chunk_rows > _cur_cap:
         restore_conf = {_batch_key: str(_cur_cap)}
         spark.conf.set(_batch_key, str(chunk_rows))
+
+    # ONE bounded driver sample feeds both the linked probe and the race
+    # seed (only the exact race uses either). The probe collects it now,
+    # sized for both readers and before any presorted split re-sizing;
+    # without a probe only the seed reads it, collected after the resume
+    # check so a no-op resume skips it.
+    sample: pd.DataFrame | None = None
+    if probe:
+        n_sample = max(seed_sample_rows(chunk_rows), PROBE_SAMPLE_ROWS)
+        sample = _driver_sample(df, key_cols, colspecs, n_sample)
+        linked_cols = _propose_linked_cols(sample, key_cols, colspecs)
     if presorted:
         # split sizing BEFORE resolving the split count — the count is the
         # persisted partition mapping (see _tune_presorted_splits)
-        restore_conf = {**(restore_conf or {}), **(_tune_presorted_splits(spark, df) or {})} or None
+        resized = _tune_presorted_splits(spark, df)
+        if resized:
+            restore_conf = {**(restore_conf or {}), **resized}
+            # re-sized splits can re-order the scan's first rows: the race
+            # seed re-samples in the order the kernel will read
+            sample = None
         default_parts = df.rdd.getNumPartitions()
         salt_block = 0  # unused: partition mapping is the input split id
     else:
@@ -819,19 +840,6 @@ def encode_table(
         # every task ~4 parts and bounds the straggler ratio, and finer parts
         # also mean finer resume granularity
         default_parts = 4 * int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    # ONE bounded driver sample feeds both the linked probe and the race
-    # seed (only the exact race uses either). A fresh store collects it now,
-    # sized for both readers; an existing store only needs the seed's
-    # prefix, collected after the resume check so a no-op resume skips it.
-    sample: pd.DataFrame | None = None
-    if selection == "exact" and stored_doc is None:
-        n_sample = seed_sample_rows(chunk_rows)
-        if probe:
-            n_sample = max(n_sample, PROBE_SAMPLE_ROWS)
-        sample = _driver_sample(df, key_cols, colspecs, n_sample)
-    if probe:
-        linked_cols = _propose_linked_cols(sample, key_cols, colspecs)
     num_parts, salt_block = _persist_or_validate_schema(
         store, colspecs, key_cols, num_parts, salt_block, default_parts,
         chunk_rows=chunk_rows, linked_cols=linked_cols,
@@ -849,18 +857,18 @@ def encode_table(
         part_col = F.pmod(F.xxhash64(*salt_parts), F.lit(num_parts)).cast("int")
         work = df.withColumn("_part_id", part_col)
 
-    # lineage rows committed before this run, or None when unknown (an
-    # append with resume=False to an existing store re-reads after commit).
-    # A store with no _schema.json has no lineage yet.
-    prior: list | None = [] if stored_doc is None else None
-    if resume and stored_doc is not None:
-        # one metadata collect answers both the done-part set and the
-        # prior totals
+    # lineage rows committed before this run: one metadata collect answers
+    # both the done-part set (on resume) and the prior totals. A store with
+    # no _schema.json has no lineage yet, and a staged run (commit=False)
+    # returns only its own totals.
+    prior = []
+    if stored_doc is not None and (resume or commit):
         prior = (
             read_lineage(spark, store)
             .select("part_id", "n_rows", "raw_bytes", "enc_bytes")
             .collect()
         )
+    if resume:
         done = sorted({r.part_id for r in prior})
         if done and set(done) >= set(range(num_parts)):
             # resume no-op fast path: every commit unit is already visible,
@@ -897,7 +905,7 @@ def encode_table(
         from ..learned import var_regressor_params
 
         var_model = var_regressor_params()
-        if stored_doc is not None:
+        if sample is None:
             sample = _driver_sample(df, key_cols, colspecs, seed_sample_rows(chunk_rows))
         race_seed = _sample_race_seed(sample, key_cols, colspecs, chunk_rows)
 
@@ -957,8 +965,9 @@ def encode_table(
     )
     if not commit:
         # staged run (compaction rewrite): chunk files exist but are
-        # INVISIBLE — the caller swaps them in atomically via the lineage
-        # pointer. A crash leaves an orphan run dir for vacuum_store.
+        # INVISIBLE — the caller commits ``parts`` itself (compact_store
+        # swaps them in atomically via the lineage pointer). A crash leaves
+        # an orphan run dir for vacuum_store.
         rows, raw, enc = _totals(parts)
         return {
             "run_id": run_id,
@@ -970,23 +979,12 @@ def encode_table(
             "enc_bytes": enc,
             "ratio": (enc / raw) if raw else None,
             "committed": False,
+            "parts": parts,
             "chunk_rows": chunk_rows,
             **({"tune_sizes": tune_sizes} if tune_sizes else {}),
         }
     commit_run(store, run_id, parts, wall_ms)
-    if prior is None:
-        st = (
-            read_lineage(spark, store)
-            .agg(
-                F.sum("n_rows").alias("rows"),
-                F.sum("raw_bytes").alias("raw"),
-                F.sum("enc_bytes").alias("enc"),
-            )
-            .collect()[0]
-        )
-        rows, raw, enc = st.rows, st.raw, st.enc
-    else:
-        rows, raw, enc = _totals(prior + parts)
+    rows, raw, enc = _totals(prior + parts)
     return {
         "run_id": run_id,
         "wall_ms": wall_ms,

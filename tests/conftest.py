@@ -11,13 +11,15 @@ def spark():
 
 
 @pytest.fixture(autouse=True)
-def _restore_var_regressor():
-    """Keep the process-global race-pruning regressor from leaking between
-    tests: fitting it (``learned.var_regressor_params``) and every exact
-    ``encode_table`` install it in-process, which would silently switch
-    pruning on for later library calls and make results order-dependent."""
+def _no_var_regressor():
+    """Run every test without the process-global race-pruning regressor, as
+    a fresh process starts: fitting it (``learned.var_regressor_params``)
+    and every exact ``encode_table`` install it in-process — module-scoped
+    fixtures too, which set up before this fixture — and a leaked install
+    would silently switch pruning on for later library calls and make
+    results order-dependent. Tests that want it install it themselves."""
     from learn_to_compress_spark import learned
 
-    saved = learned._VAR_REG
+    learned._VAR_REG = None
     yield
-    learned._VAR_REG = saved
+    learned._VAR_REG = None

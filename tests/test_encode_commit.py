@@ -10,8 +10,10 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+import learn_to_compress_spark.jobs.encode as encode_mod
 from learn_to_compress_spark.chunkstore import lineage_current_dir, read_lineage
 from learn_to_compress_spark.jobs import decode_table, encode_table
+from learn_to_compress_spark.jobs.compact import vacuum_store
 from learn_to_compress_spark.jobs.encode import (
     PROBE_SAMPLE_ROWS,
     _driver_sample,
@@ -65,9 +67,9 @@ def test_fresh_encode_starts_at_most_five_spark_jobs(spark, tmp_path):
 
 
 def test_returned_totals_match_lineage(spark, tmp_path):
-    """Totals computed from the resume collect plus the run's own rows equal
-    a full lineage aggregation: partial resume, resumed no-op and a
-    resume=False append (the path that still re-reads)."""
+    """Totals computed from the prior-lineage collect plus the run's own
+    rows equal a full lineage aggregation: partial resume, resumed no-op
+    and a resume=False append."""
     df = transcripts_df(spark, 80, parallelism=4)
     store = str(tmp_path / "store")
     part = F.pmod(
@@ -147,7 +149,8 @@ def test_shared_sample_matches_separate_collects(spark, tmp_path, chunk_rows):
 def test_stray_commit_temp_file_is_invisible(spark, tmp_path, monkeypatch):
     """A crash between writing the lineage temp file and publishing it
     leaves a hidden ``.part-*.tmp`` holding the run's rows: readers must not
-    see that run, and a later resume still finds the store complete."""
+    see that run, a later resume still finds the store complete, and
+    vacuum_store deletes the stray file."""
     df = transcripts_df(spark, 40, parallelism=2)
     store = str(tmp_path / "store")
     kw = dict(chunk_rows=CHUNK_ROWS, num_parts=4)
@@ -178,3 +181,49 @@ def test_stray_commit_temp_file_is_invisible(spark, tmp_path, monkeypatch):
     m2 = encode_table(df, store, **kw)
     assert m2.get("resumed_noop") is True
     assert _returned(m2) == _returned(m1)
+
+    v = vacuum_store(spark, store)
+    assert stray[0] in v["removed_lineage_versions"]
+    assert not os.path.exists(os.path.join(lineage_current_dir(store), stray[0]))
+    assert sorted(map(tuple, read_lineage(spark, store).collect())) == lineage_before
+
+
+def test_presorted_probe_samples_before_split_resizing(spark, tmp_path, monkeypatch):
+    """On a fresh presorted encode the linked probe reads the scan order
+    BEFORE _tune_presorted_splits re-sizes the file splits, and the race
+    seed reads the re-sized order the kernel encodes — the rows each would
+    get from its own collect (re-sized splits can re-order a multi-file
+    scan's first rows)."""
+    df = _correlated_files(spark, tmp_path, rows=5_000)
+    key = "spark.sql.files.maxPartitionBytes"
+    untuned = spark.conf.get(key)
+    seen = {}
+    real_sample, real_probe, real_seed = (
+        encode_mod._driver_sample, encode_mod._propose_linked_cols,
+        encode_mod._sample_race_seed,
+    )
+
+    def sample(df_, *a):
+        out = real_sample(df_, *a)
+        seen[id(out)] = spark.conf.get(key)
+        return out
+
+    def probe(s, *a, **k):
+        seen["probe"] = seen[id(s)]
+        return real_probe(s, *a, **k)
+
+    def seed(s, *a, **k):
+        seen["seed"] = seen[id(s)]
+        return real_seed(s, *a, **k)
+
+    monkeypatch.setattr(encode_mod, "_driver_sample", sample)
+    monkeypatch.setattr(encode_mod, "_propose_linked_cols", probe)
+    monkeypatch.setattr(encode_mod, "_sample_race_seed", seed)
+    m = encode_table(
+        df, str(tmp_path / "store"), key_cols=("user_id", "ts"),
+        chunk_rows=CHUNK_ROWS, presorted=True,
+    )
+    assert m["rows"] == df.count()
+    assert seen["probe"] == untuned
+    assert seen["seed"] != untuned  # the re-sized split conf
+    assert spark.conf.get(key) == untuned  # restored after the write
